@@ -280,8 +280,8 @@ def frontier_throughput(spark, warmup: bool = True, reps: int = 5) -> dict:
     freed via PinSet so reps don't accumulate block-manager garbage.
 
     Physical shape: the frontier is read from its domain-bucketed,
-    (domain, url)-sorted table (plans/bucketed.py) — exactly how the
-    1e10-row deployment stores it — so the measured per-wave plan
+    (domain, url)-sorted table (plans/bucketed.py) — a kernel layout,
+    not the crawl engine's pinned frontier — so the measured per-wave plan
     shuffles ONLY wave-sized data: the per-host window runs with no
     Exchange and the merge joins scan the frontier in place."""
     from pyspark.sql import functions as F

@@ -70,7 +70,6 @@ class CrawlConfig:
     max_domain_failures: int = 6  # crawler.go:513 (`> 6`)
     wave_size: int = 1  # 1 = exact reference schedule; >1 = scale mode
     per_host_budget: int = 1  # max URLs per host per wave (scale mode)
-    bloom_fpr: float = 1e-6
     seed: int = 42
 
     # ---- assembled regexes (crawler.go:1415-1420, 1462-1468) ----

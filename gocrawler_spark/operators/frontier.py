@@ -11,9 +11,9 @@ Spark-first design:
   selection-time `!isBanned && linkSeemsOk(url, true)` predicate
   (crawler.go:407) once at insert.
 - wave-local dedup is a groupBy on the URL (one shuffle, map-side
-  combine); cross-wave dedup + in-degree merge is a full outer join on
-  url — at scale both sides are bucketed/partitioned by xxhash64(url)
-  so the join is co-located (see plans/crawl.py notes).
+  combine); cross-wave dedup + in-degree merge is a left join (count
+  update) plus an anti-join (new URLs) on url, where the wave-sized
+  candidate side is the one the planner broadcasts or shuffles.
 - selection is a ranking window partitioned by domain (top-k per host)
   + a global TakeOrderedAndProject — no driver-side loop.
 
@@ -169,10 +169,7 @@ def merge_into_frontier(
     frontier: DataFrame,
     cand: DataFrame,
     cfg: CrawlConfig,
-    bloom: DataFrame | None = None,
-    n_shards: int = 64,
     pin=None,
-    broadcast_max_rows: int = 200_000,
     base: int | None = None,
 ) -> DataFrame:
     """F5/A4 cross-wave merge: existing URLs get count += delta; new
@@ -181,23 +178,19 @@ def merge_into_frontier(
     append order exactly at wave=1.
 
     Physical design (the measured-at-5M-rows version):
-    - count update = frontier LEFT JOIN candidates. With the Bloom
-      split the probe side is tiny (true dups + FPR·new) and is
-      broadcast — the 1e10-row frontier is never shuffled. Without
-      Bloom, Catalyst/AQE picks the strategy (broadcast when the wave
-      is small enough, else a co-located SMJ against the url-bucketed
-      frontier table).
-    - new rows = candidates ANTI JOIN frontier (skipped entirely for
-      the Bloom definitely-new set), PINNED via localCheckpoint before
-      seq assignment: _assign_seq consumes its input twice (ranking +
-      offsets), and without the pin the join would re-execute per use
-      (measured 2-4x the merge cost, with AQE reuse being unreliable).
-      Callers running many waves pass `pin` (a PinSet.pin) so the block
-      is freed once the merged frontier is materialized — the default
-      bare localCheckpoint is never freed by Spark (see pins.py).
+    - count update = frontier LEFT JOIN candidates. Catalyst/AQE picks
+      the strategy: broadcast when the wave is small enough, else a
+      sort-merge join.
+    - new rows = candidates ANTI JOIN frontier, PINNED via
+      localCheckpoint before seq assignment: _assign_seq consumes its
+      input twice (ranking + offsets), and without the pin the join
+      would re-execute per use (measured 2-4x the merge cost, with AQE
+      reuse being unreliable). Callers running many waves pass `pin`
+      (a PinSet.pin) so the block is freed once the merged frontier is
+      materialized — the default bare localCheckpoint is never freed
+      by Spark (see pins.py).
     - seq assignment is the two-level rank of _assign_seq — no
       single-partition window anywhere in the merge.
-    Results are byte-identical with and without bloom (e2e-tested).
 
     `base` (the first seq to assign) may be supplied by callers that
     track it driver-side — this keeps the merge from running an extra
@@ -210,42 +203,9 @@ def merge_into_frontier(
     if pin is None:
         pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
 
-    if bloom is not None:
-        from gocrawler_spark.operators import bloom as B
-
-        # pin cand first: it is consumed twice below (probe-semi and the
-        # definitely_new anti-join), and recomputing it means re-running
-        # the wave's link explode + groupBy.
-        cand = pin(cand)
-        hits = (
-            B.probe(bloom, cand, n_shards=n_shards)
-            .filter(F.col("maybe_seen"))
-            .select("url")
-        )
-        # probably_seen is consumed twice (count-update probe + FP anti-join)
-        # — pin it so the bloom probe runs ONCE. definitely_new is then the
-        # anti-join against the PINNED seen set, not split_candidates'
-        # plan: the latter re-references the unpinned probe, so its later
-        # materialization would run the cogroup probe a second time.
-        # Broadcast only while probably_seen is actually small: true dups
-        # + FPR·new is wave-bounded in the normal case, but a dup-heavy
-        # wave can exceed the broadcast limit, so fall through to the
-        # join planner (AQE) above the threshold.
-        probably_seen = pin(cand.join(hits, "url", "left_semi"))
-        definitely_new = cand.join(
-            probably_seen.select("url"), "url", "left_anti"
-        )
-        if probably_seen.count() <= broadcast_max_rows:
-            probe = F.broadcast(probably_seen)
-        else:
-            probe = probably_seen
-    else:
-        probably_seen, definitely_new = cand, None
-        probe = probably_seen
-
     updated = (
         frontier.alias("f")
-        .join(probe.alias("c").select("url", "delta"), "url", "left")
+        .join(cand.alias("c").select("url", "delta"), "url", "left")
         .select(
             "url",
             F.col("f.domain").alias("domain"),
@@ -255,11 +215,11 @@ def merge_into_frontier(
             F.col("f.eligible").alias("eligible"),
         )
     )
-    fp_new = probably_seen.join(frontier.select("url"), "url", "left_anti")
-    new_src = (
-        fp_new if definitely_new is None else definitely_new.unionByName(fp_new)
+    new_src = pin(
+        cand.join(frontier.select("url"), "url", "left_anti").select(
+            "url", "domain", "delta", "first_at"
+        )
     )
-    new_src = pin(new_src.select("url", "domain", "delta", "first_at"))
     new = _assign_seq(new_src, base).select(
         "url",
         "domain",

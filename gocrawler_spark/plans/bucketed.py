@@ -33,6 +33,12 @@ Replaces reference semantics: same operators as operators/frontier.py
 (addLink crawler.go:425-470, getNextLink crawler.go:384-423), only
 the physical strategy differs; merge results are asserted identical
 to merge_into_frontier in tests/test_bucketed.py.
+
+Users: `bench.py`'s frontier rep runs on BucketedFrontier, and the
+image payload store (plans/image_store.py) shares CONFS. The crawl
+engine (plans/crawl.py) does not use it: its frontier is a pinned
+DataFrame, which costs less CPU per wave than this table on the
+engine benchmark (perfbench/).
 """
 
 from __future__ import annotations

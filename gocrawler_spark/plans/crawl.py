@@ -16,13 +16,13 @@ frequencies — verified against oracle/pyoracle.py). With wave_size=k
 it is the scale mode: the same plan, more rows per wave.
 
 Scale design (100 TB / 1e10-URL frontier):
-- frontier and pages tables are hash-partitioned on url (bucketed
-  xxhash64) so the per-wave MERGE joins are co-located;
+- the frontier is one pinned DataFrame, materialized once per wave:
+  the selected rows' status transition fuses into the link merge,
+  whose joins broadcast the wave-sized side (Catalyst/AQE picks the
+  strategy), so the frontier side is streamed, never rebuilt twice;
 - domain_counter / fail_counts are one-row-per-host dims → broadcast;
-- the fetch stage repartitions the wave by domain (salted when
-  fetch_salt > 1: (domain, xxhash64(url) % salt) splits hot hosts
-  across partitions) so per-task host fan-out is bounded and skew is
-  capped by per_host_budget;
+- the fetch stage repartitions the wave by domain so per-task host
+  fan-out is bounded; per_host_budget caps per-host skew per wave;
 - state lineage is truncated per wave via localCheckpoint (test mode)
   or parquet snapshots + a JSON manifest (resume mode — an
   Iceberg-style shim; see TableStore). Checkpoints mirror the
@@ -32,7 +32,7 @@ Scale design (100 TB / 1e10-URL frontier):
 - append-only state (pages, signatures, logs, corpus/host counters)
   is DELTA-ACCUMULATED: each wave pins only its small delta and the
   state field is a lazy union of the pinned pieces, compacted into a
-  single pin every `compact_every` waves — the Iceberg delta+compact
+  single pin every COMPACT_EVERY waves — the Iceberg delta+compact
   pattern. This cuts the eager materializations per wave roughly in
   half versus re-checkpointing every full table every wave, and at
   1e10-row scale it is the only shape that works at all (re-writing
@@ -45,9 +45,8 @@ crawler.go:1082-1406,1477-1543.
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -59,12 +58,16 @@ from gocrawler_spark.config import CrawlConfig
 from gocrawler_spark.operators import corpus as CO
 from gocrawler_spark.operators import curation as CU
 from gocrawler_spark.operators import frontier as FR
-from gocrawler_spark.operators import bloom as BL
 from gocrawler_spark.operators import cuckoo as CK
 from gocrawler_spark.operators import images as IM
 from gocrawler_spark.operators import politeness as PO
 from gocrawler_spark.pins import PinSet
 from gocrawler_spark.plans.store import TableStore
+
+# fixed engine geometry (no caller has needed another value)
+COMPACT_EVERY = 8  # waves between compactions of the delta pieces
+CUCKOO_SHARDS = 16  # shards of the deletable seen-set
+WAVE_BUDGET_MS = 4000  # per-host crawl-delay budget of one wave
 
 FETCH_SCHEMA = T.StructType(
     [
@@ -129,7 +132,6 @@ class CrawlState:
     accepted: DataFrame  # accepted docs
     ranking_rows: DataFrame  # S6 CSV analog
     images: DataFrame | None = None  # input_hint payload table (graft)
-    bloom: DataFrame | None = None  # sharded seen-set accelerator
     cuckoo: DataFrame | None = None  # deletable fetched-URL seen set
     robots: DataFrame | None = None  # robots.txt cache (politeness)
     wave: int = 0
@@ -145,19 +147,11 @@ class CrawlEngine:
         lang_gate=CU.default_lang_gate,
         checkpoint_dir: str | None = None,
         with_images: bool = False,
-        use_bloom: bool = False,
-        bloom_shards: int = 32,
         use_cuckoo: bool = False,
-        cuckoo_shards: int = 16,
         use_robots: bool = False,
-        wave_budget_ms: int = 4000,
         robots_fn=None,
         checkpoint_every: int = 1,
-        use_bucketed_frontier: bool = False,
-        frontier_buckets: int = 32,
         index_transport=None,
-        compact_every: int = 8,
-        fetch_salt: int = 1,
     ):
         from gocrawler_spark.sources import synthetic_web
 
@@ -168,27 +162,16 @@ class CrawlEngine:
         self.lang_gate = lang_gate
         self.checkpoint_dir = checkpoint_dir
         self.with_images = with_images
-        self.use_bloom = use_bloom
-        self.bloom_shards = bloom_shards
-        # current per-shard Bloom capacity: every filter that gets
-        # OR-merged must share geometry, so the regrow guard
-        # (_maybe_regrow_bloom) bumps this and all later wave filters
-        # are built to match
-        self._bloom_cap = 200_000
         # deletable seen-set (north_rule names the bloom/cuckoo pair):
         # tracks exactly the FETCHED page keys, so URL retirement is a
         # per-shard O(1) delete instead of a Bloom rebuild — the
         # recrawl wave's enabler (retire/retire_stalest below)
         self.use_cuckoo = use_cuckoo
-        self.cuckoo_shards = cuckoo_shards
         self._cuckoo_cap = 200_000
         self.use_robots = use_robots
-        self.wave_budget_ms = wave_budget_ms
         self.robots_fn = robots_fn
         self.checkpoint_every = checkpoint_every
         self.index_transport = index_transport
-        self.compact_every = compact_every
-        self.fetch_salt = max(1, int(fetch_salt))
         self.store = TableStore(checkpoint_dir) if checkpoint_dir else None
         self.pins = PinSet(spark)
         # delta-accumulated state: family -> list of pieces (pinned
@@ -208,34 +191,12 @@ class CrawlEngine:
         self._pending: dict[str, list[DataFrame]] = {}
         self._flushed_segs: dict[str, list[dict]] = {}
         self._seg_counter: dict[str, int] = {}
-        # scale mode: frontier state lives in a domain-bucketed,
-        # (domain, url)-sorted table so the per-wave plans never
-        # shuffle it (plans/bucketed.py). Mutually exclusive with the
-        # Bloom split only in the sense that the bucketed merge does
-        # not need it: its anti-join is already co-located.
-        self.bfront = None
-        if use_bucketed_frontier:
-            from gocrawler_spark.plans.bucketed import BucketedFrontier
-
-            self.bfront = BucketedFrontier(
-                spark,
-                name=f"crawl_frontier_{abs(id(self)) % 10**9}",
-                n_buckets=frontier_buckets,
-            )
         self.state = self._init_state()
 
     # ------------------------------------------------------------------
 
     def _df(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
-
-    def _set_frontier(self, plan: DataFrame) -> None:
-        """Materialize the next frontier state: bucketed-table write in
-        scale mode, localCheckpoint pin otherwise."""
-        if self.bfront is not None:
-            self.state.frontier = self.bfront.write(plan)
-        else:
-            self.state.frontier = self._pin(plan)
 
     # append-only families and, for the summed ones, (key, value) of
     # the additive merge their union view re-aggregates
@@ -251,11 +212,7 @@ class CrawlEngine:
 
     def _init_state(self) -> CrawlState:
         s = self.spark
-        boot = FR.bootstrap_frontier(s, self.cfg)
-        if self.bfront is not None:
-            boot = self.bfront.write(boot)
-        else:
-            boot = self._pin(boot)
+        boot = self._pin(FR.bootstrap_frontier(s, self.cfg))
         max_seq = boot.agg(F.max("seq")).first()[0]
         self._next_seq = (max_seq if max_seq is not None else -1) + 1
         bases = {
@@ -285,16 +242,6 @@ class CrawlEngine:
         }
         return CrawlState(
             frontier=boot,
-            bloom=(
-                BL.build(
-                    FR.bootstrap_frontier(s, self.cfg).select("url"),
-                    n_shards=self.bloom_shards,
-                    expected_keys_per_shard=self._bloom_cap,
-                    fpr=self.cfg.bloom_fpr,
-                )
-                if self.use_bloom
-                else None
-            ),
             robots=PO.empty_robots(s) if self.use_robots else None,
             **bases,
         )
@@ -374,12 +321,12 @@ class CrawlEngine:
     def _gc_pins(self) -> None:
         """Free every pin not referenced by current state — called at
         the end of each wave, after all new state is eagerly
-        materialized. The retain set is the frontier/bloom/robots pins
+        materialized. The retain set is the frontier/cuckoo/robots pins
         plus every pinned delta the lazy union views depend on
         (self._live); wave-transient pins (selection, wave rows, merge
         intermediates) fall out of it and are freed."""
         st = self.state
-        keep = list(self._live) + [st.frontier, st.bloom, st.cuckoo, st.robots]
+        keep = list(self._live) + [st.frontier, st.cuckoo, st.robots]
         self.pins.retain(keep)
 
     # ------------------------------------------------------------------
@@ -447,7 +394,7 @@ class CrawlEngine:
             # deferral can starve indefinitely
             g = PO.token_budget_cap(
                 gated.filter(F.col("robots_allowed")),
-                wave_budget_ms=self.wave_budget_ms,
+                wave_budget_ms=WAVE_BUDGET_MS,
             )
             # disallowed -> refused (status 3, no fetch); over-budget ->
             # deferred (stay pending, compete again next wave)
@@ -505,28 +452,10 @@ class CrawlEngine:
         # the fetch runs EXACTLY once: fetched_new is the only pin that
         # executes the UDF; everything downstream (page cache delta,
         # failure delta, the wave view) is a lazy projection of it.
-        # fetch_salt > 1 defeats hot-domain skew (north_rule): a domain
-        # whose per-wave allocation dwarfs the others is split across
-        # up to `salt` partitions by a url-hash sub-key. Safe because
-        # the fetch fn is pure per-URL (politeness = selection-time
-        # budget + fail counters, not partition-local rate limiting).
-        if self.fetch_salt > 1:
-            # explicit partition count: AQE coalesces shuffle
-            # partitions by BYTE size, but fetch cost is per-URL
-            # (network), not bytes — wave URLs are tiny, so AQE would
-            # fold the salted split right back into one task.
-            n_parts = int(
-                self.spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-            to_run = fetchable.repartition(
-                n_parts,
-                F.col("domain"),
-                F.pmod(F.xxhash64("url"), F.lit(self.fetch_salt)),
-            )
-        else:
-            to_run = fetchable.repartition(F.col("domain"))
         fetched_new = self._pin(
-            to_run.select("url").mapInPandas(fetch_udf, FETCH_SCHEMA)
+            fetchable.repartition(F.col("domain"))
+            .select("url")
+            .mapInPandas(fetch_udf, FETCH_SCHEMA)
         )
         self._live.append(fetched_new)
         fetched = fetched_new.unionByName(
@@ -558,12 +487,12 @@ class CrawlEngine:
         self._append("pages", ok_new)
 
         # deletable seen-set: insert EXACTLY the new page-cache keys
-        # (cuckoo delete is only sound for inserted keys, so unlike
-        # the Bloom path this must NOT over-insert wave candidates)
+        # (cuckoo delete is only sound for inserted keys, so it must
+        # NOT over-insert wave candidates)
         if self.use_cuckoo:
             new_ck = CK.build(
                 ok_new.select("url"),
-                n_shards=self.cuckoo_shards,
+                n_shards=CUCKOO_SHARDS,
                 expected_keys_per_shard=self._cuckoo_cap,
             )
             st.cuckoo = self._pin(
@@ -601,8 +530,7 @@ class CrawlEngine:
             "url", F.when(F.col("ok"), 2).otherwise(3).alias("new_status")
         )
         # status_after is wave-sized -> broadcast: the frontier side is
-        # streamed in place (bucketed mode: scan stays bucket-aligned).
-        # Non-bucketed mode leaves this LAZY and fuses it into the
+        # streamed in place. This stays LAZY and fuses into the
         # link-expansion merge below — one frontier materialization per
         # wave instead of two.
         status_updated = (
@@ -614,8 +542,6 @@ class CrawlEngine:
                 "seq", "eligible",
             )
         )
-        if self.bfront is not None:
-            self._set_frontier(status_updated)
         self._append(
             "crawl_log",
             wave_meta.select(
@@ -686,90 +612,23 @@ class CrawlEngine:
         )
         parents = boot_parents.unionByName(accepted_parents)
         cand = FR.candidate_links(parents, cfg)
-        if self.bfront is not None:
-            self._set_frontier(self.bfront.merge(cand, pin=self._pin))
-        else:
-            # ONE frontier materialization per wave: the lazy status
-            # transition plan feeds the merge directly; the insertion
-            # seq base is tracked driver-side, so no extra max(seq)
-            # job runs over the unmaterialized plan.
-            st.frontier = self._pin(
-                FR.merge_into_frontier(
-                    status_updated, cand, cfg, bloom=st.bloom,
-                    n_shards=self.bloom_shards, pin=self._pin,
-                    base=self._next_seq,
-                )
+        # ONE frontier materialization per wave: the lazy status
+        # transition plan feeds the merge directly; the insertion seq
+        # base is tracked driver-side, so no extra max(seq) job runs
+        # over the unmaterialized plan.
+        st.frontier = self._pin(
+            FR.merge_into_frontier(
+                status_updated, cand, cfg, pin=self._pin, base=self._next_seq
             )
-            # narrow max over the just-pinned blocks (no recompute)
-            m = st.frontier.agg(F.max("seq")).first()[0]
-            if m is not None:
-                self._next_seq = m + 1
-        if self.use_bloom:
-            # grow the seen-set by ALL wave candidates (superset of the
-            # newly appended URLs — harmless for a Bloom filter, avoids
-            # an extra new-vs-old join just for bookkeeping)
-            st.bloom = self._pin(
-                BL.merge(
-                    st.bloom,
-                    BL.build(
-                        cand.select("url"),
-                        n_shards=self.bloom_shards,
-                        expected_keys_per_shard=self._bloom_cap,
-                        fpr=cfg.bloom_fpr,
-                    ),
-                )
-            )
-        if self.compact_every and wave % self.compact_every == 0:
+        )
+        # narrow max over the just-pinned blocks (no recompute)
+        m = st.frontier.agg(F.max("seq")).first()[0]
+        if m is not None:
+            self._next_seq = m + 1
+        if wave % COMPACT_EVERY == 0:
             self._compact()
-            if self.use_bloom:
-                self._maybe_regrow_bloom()
         self._gc_pins()
         return True
-
-    def _maybe_regrow_bloom(self) -> None:
-        """Geometry guard for the accumulated seen-set filter
-        (north_rule FPR promise): per-wave candidate filters are built
-        at a fixed expected_keys_per_shard and OR-merged, so the bit
-        arrays never grow while cumulative keys do — past capacity the
-        bits saturate and FPR degrades toward 1 SILENTLY, collapsing
-        split_candidates into all-probably-seen (correct but the
-        accelerator is gone, plus a wasted probe per wave).
-
-        n_keys per shard is an upper bound on inserted keys (merge
-        sums both sides, duplicates included). Checked at compaction
-        cadence: past 60% of the geometry's design capacity, the
-        filter is REBUILT from the frontier's URLs — the authoritative
-        seen set, so the no-false-negative invariant is restored
-        exactly — with per-shard capacity sized 4x the measured load.
-        Cost: one build job every compact_every waves at worst;
-        amortized O(1) rebuilds per capacity doubling."""
-        import math
-
-        st = self.state
-        row = st.bloom.agg(
-            F.sum("n_keys").alias("keys"), F.max("m_bits").alias("m")
-        ).first()
-        if row is None or row["keys"] is None:
-            return
-        total_keys, m_bits = int(row["keys"]), int(row["m"])
-        # invert bloom.geometry: the n this m was sized for at cfg.fpr
-        cap_per_shard = m_bits * (math.log(2) ** 2) / -math.log(
-            self.cfg.bloom_fpr
-        )
-        if total_keys <= 0.6 * cap_per_shard * self.bloom_shards:
-            return
-        new_cap = max(
-            self._bloom_cap, int(total_keys * 4 / self.bloom_shards) + 1
-        )
-        self._bloom_cap = new_cap
-        st.bloom = self._pin(
-            BL.build(
-                st.frontier.select("url"),
-                n_shards=self.bloom_shards,
-                expected_keys_per_shard=new_cap,
-                fpr=self.cfg.bloom_fpr,
-            )
-        )
 
     def retire(self, urls: DataFrame) -> DataFrame:
         """The RECRAWL wave's retirement half: make the given fetched
@@ -833,7 +692,7 @@ class CrawlEngine:
 
                     shutil.rmtree(seg["path"], ignore_errors=True)
         st.cuckoo = self._pin(
-            CK.delete(st.cuckoo, retired, n_shards=self.cuckoo_shards)
+            CK.delete(st.cuckoo, retired, n_shards=CUCKOO_SHARDS)
         )
         for fam in ("pages", "signatures"):
             view = self._union_view(fam).join(
@@ -859,7 +718,7 @@ class CrawlEngine:
                 "eligible",
             )
         )
-        self._set_frontier(reset)
+        st.frontier = self._pin(reset)
         self._gc_pins()
         return retired
 
@@ -887,10 +746,9 @@ class CrawlEngine:
 
     def checkpoint(self) -> None:
         """Commit a snapshot: flush pending delta segments, rewrite
-        the mutating tables (frontier/bloom/robots — row-level MERGE
-        persistence is out of scope for the parquet shim; in bucketed
-        scale mode the frontier already lives in its own disk-backed
-        table), and atomically commit the manifest naming everything.
+        the mutating tables (frontier/cuckoo/robots — row-level MERGE
+        persistence is out of scope for the parquet shim), and
+        atomically commit the manifest naming everything.
         Per-checkpoint I/O for the append-only families is O(rows
         appended since the last checkpoint), not O(state)."""
         if self.store is None:
@@ -901,7 +759,6 @@ class CrawlEngine:
             st.wave,
             full_tables={
                 "frontier": st.frontier,
-                "bloom": st.bloom,
                 "cuckoo": st.cuckoo,
                 "robots": st.robots,
             },
@@ -935,7 +792,10 @@ class CrawlEngine:
         """Reconstruct an engine from the last committed snapshot.
         Exact resume: the restored state is byte-identical to the
         checkpointed one, so continuing produces the same results as a
-        never-interrupted run (tests/test_resume.py)."""
+        never-interrupted run (tests/test_resume.py). A table the
+        engine does not keep (the ``bloom`` seen-set of older
+        snapshots) is skipped, and the next checkpoint's manifest no
+        longer names it."""
         eng = cls(spark, cfg, checkpoint_dir=checkpoint_dir, **kw)
         loaded = eng.store.load_snapshot(spark)
         if loaded is None:
@@ -944,13 +804,13 @@ class CrawlEngine:
         st = eng.state
         for name, df in tables.items():
             if name == "frontier":
-                eng._set_frontier(df)
+                st.frontier = eng._pin(df)
             elif name == "cuckoo":
                 if eng.use_cuckoo:
                     st.cuckoo = eng._pin(df)
-            elif name in ("bloom", "robots"):
-                if getattr(st, name, None) is not None:
-                    setattr(st, name, eng._pin(df))
+            elif name == "robots":
+                if st.robots is not None:
+                    st.robots = eng._pin(df)
             elif name in eng._pieces or name == "images":
                 if name in eng._SUMMED:
                     # delta segments are additive per-checkpoint
@@ -969,19 +829,6 @@ class CrawlEngine:
                 eng._seg_counter[nm] = len(entry["segments"])
         m = st.frontier.agg(F.max("seq")).first()[0]
         eng._next_seq = (m if m is not None else -1) + 1
-        if eng.use_bloom and "bloom" not in tables:
-            # Snapshot was written without bloom: the bootstrap-built filter
-            # only covers the seed URLs, violating the no-false-negative
-            # invariant (frontier ⊆ bloom keys) against the restored
-            # frontier. Rebuild the filter from the frontier's URLs.
-            st.bloom = eng._pin(
-                BL.build(
-                    st.frontier.select("url"),
-                    n_shards=eng.bloom_shards,
-                    expected_keys_per_shard=eng._bloom_cap,
-                    fpr=cfg.bloom_fpr,
-                )
-            )
         if (
             eng.use_cuckoo
             and st.cuckoo is None
@@ -993,7 +840,7 @@ class CrawlEngine:
             st.cuckoo = eng._pin(
                 CK.build(
                     st.pages.select("url"),
-                    n_shards=eng.cuckoo_shards,
+                    n_shards=CUCKOO_SHARDS,
                     expected_keys_per_shard=eng._cuckoo_cap,
                 )
             )

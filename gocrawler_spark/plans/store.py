@@ -5,7 +5,7 @@ metrics". The sandbox has no Iceberg runtime jar, so this implements
 the same contract on plain parquet (SURVEY.md §4: the shim):
 
 - each state table is a list of **segments** (parquet dirs). Mutating
-  tables (frontier, bloom, robots) are ``mode="full"``: one segment,
+  tables (frontier, cuckoo, robots) are ``mode="full"``: one segment,
   rewritten per checkpoint. Append-only tables (pages, signatures,
   logs, counters, corpus freqs) are ``mode="delta"``: every checkpoint
   adds ONLY the rows appended since the last one — per-checkpoint

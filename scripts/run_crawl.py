@@ -6,13 +6,15 @@
         --steps 12 --output /path/out \
         [--profile covid|neutral|test] \
         [--global-yaml crawler.yaml --profile-yaml topic.yaml] \
-        [--checkpoint /path/ckpt] [--bloom] [--bucketed] \
+        [--checkpoint /path/ckpt] \
         [--wave-size 1000] [--shuffle-partitions 256]
 
 No master is hardcoded: spark-submit supplies it, so the same script
 runs on local[N] and on a multi-executor cluster. Outputs: frontier /
 accepted / corpus_freq / crawl_log parquet under --output, plus a
-metrics.json with per-wave counters.
+metrics.json with the number of waves run (`waves`), the crawl's wall
+seconds from engine set-up to the last wave (`wall_sec`) and each
+written table's row count (`<table>_rows`).
 """
 
 from __future__ import annotations
@@ -32,8 +34,6 @@ def parse_args(argv=None):
     ap.add_argument("--global-yaml")
     ap.add_argument("--profile-yaml")
     ap.add_argument("--checkpoint")
-    ap.add_argument("--bloom", action="store_true")
-    ap.add_argument("--bucketed", action="store_true")
     ap.add_argument("--wave-size", type=int, default=1)
     ap.add_argument("--shuffle-partitions", type=int, default=0)
     return ap.parse_args(argv)
@@ -72,13 +72,7 @@ def main(argv=None) -> int:
         cfg = cfg.with_(wave_size=args.wave_size)
 
     t0 = time.time()
-    eng = CrawlEngine(
-        spark,
-        cfg,
-        checkpoint_dir=args.checkpoint,
-        use_bloom=args.bloom,
-        use_bucketed_frontier=args.bucketed,
-    )
+    eng = CrawlEngine(spark, cfg, checkpoint_dir=args.checkpoint)
     st = eng.run(max_steps=args.steps)
 
     os.makedirs(args.output, exist_ok=True)

@@ -104,45 +104,3 @@ def test_probe_empty_bloom(spark, seen_and_new):
     p = B.probe(empty, seen.limit(100), n_shards=N_SHARDS)
     assert p.filter(F.col("maybe_seen")).count() == 0
     assert p.count() == 100
-
-
-def test_engine_regrows_saturated_bloom(spark):
-    """Accumulated-filter geometry guard: past ~60% of design capacity
-    the engine rebuilds the filter from the frontier with larger
-    geometry — FPR stays engineered instead of silently degrading, and
-    the no-false-negative invariant (frontier ⊆ filter) is restored
-    exactly by construction."""
-    from pyspark.sql import functions as F
-
-    from gocrawler_spark.config import test_profile
-    from gocrawler_spark.plans.crawl import CrawlEngine
-
-    eng = CrawlEngine(
-        spark, test_profile(wave_size=1), use_bloom=True, bloom_shards=4
-    )
-    st = eng.state
-    # swap in a deliberately tiny geometry, then saturate it
-    eng._bloom_cap = 50
-    st.bloom = B.build(
-        st.frontier.select("url"),
-        n_shards=4,
-        expected_keys_per_shard=50,
-        fpr=eng.cfg.bloom_fpr,
-    )
-    extra = spark.range(1000).select(
-        F.concat(F.lit("http://x.example/p"), F.col("id")).alias("url")
-    )
-    st.bloom = B.merge(
-        st.bloom,
-        B.build(extra, n_shards=4, expected_keys_per_shard=50,
-                fpr=eng.cfg.bloom_fpr),
-    )
-    m_before = st.bloom.agg(F.max("m_bits")).first()[0]
-    eng._maybe_regrow_bloom()
-    m_after = eng.state.bloom.agg(F.max("m_bits")).first()[0]
-    assert eng._bloom_cap > 50
-    assert m_after > m_before
-    probe = B.probe(
-        eng.state.bloom, eng.state.frontier.select("url"), n_shards=4
-    )
-    assert probe.filter(~F.col("maybe_seen")).count() == 0

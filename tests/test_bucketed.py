@@ -116,28 +116,3 @@ def test_ping_pong_write(spark):
     assert bf.df().count() > 500
     # and the previous side is still readable (crash safety)
     assert spark.table(first_table).count() == 500
-
-
-def test_engine_bucketed_frontier_identical(spark):
-    """CrawlEngine(use_bucketed_frontier=True) must be a pure physical
-    optimization: identical frontier, crawl log, and corpus vs the
-    pinned-DataFrame engine on the same synthetic web."""
-    from gocrawler_spark.config import test_profile as _tp
-    from gocrawler_spark.plans.crawl import CrawlEngine
-
-    cfg = _tp(wave_size=8, per_host_budget=2)
-    plain = CrawlEngine(spark, cfg).run(max_steps=3)
-    bkt = CrawlEngine(
-        spark, cfg, use_bucketed_frontier=True, frontier_buckets=4
-    ).run(max_steps=3)
-
-    def snap(st):
-        fr = sorted(
-            (r["url"], r["domain"], r["count"], r["status"], r["seq"])
-            for r in st.frontier.collect()
-        )
-        log = sorted((r["wave"], r["url"]) for r in st.crawl_log.collect())
-        corp = sorted((r["token"], r["count"]) for r in st.corpus_freq.collect())
-        return fr, log, corp
-
-    assert snap(plain) == snap(bkt)

@@ -151,46 +151,6 @@ def test_crawl_wave_images_invariant(spark):
     assert st.images.select("image_id").distinct().count() == n
 
 
-def test_bloom_path_identical_results(spark):
-    """The Bloom-accelerated merge must be a pure optimization: same
-    frontier, same crawl log, same corpus — no false negatives may
-    ever change a result."""
-    cfg = _tp(wave_size=8, per_host_budget=2)
-    plain = CrawlEngine(spark, cfg).run(max_steps=3)
-    bloomed = CrawlEngine(spark, cfg, use_bloom=True, bloom_shards=8).run(max_steps=3)
-
-    def snap(st):
-        fr = sorted(
-            (r["url"], r["domain"], r["count"], r["status"], r["seq"])
-            for r in st.frontier.collect()
-        )
-        log = sorted((r["wave"], r["url"]) for r in st.crawl_log.collect())
-        corp = sorted((r["token"], r["count"]) for r in st.corpus_freq.collect())
-        return fr, log, corp
-
-    assert snap(plain) == snap(bloomed)
-
-
-def test_salted_fetch_identical_results(spark):
-    """fetch_salt must be a pure partitioning optimization: the salted
-    repartition (domain, xxhash64(url) % salt) changes task placement
-    of hot hosts, never results."""
-    cfg = _tp(wave_size=8, per_host_budget=4)
-    plain = CrawlEngine(spark, cfg).run(max_steps=3)
-    salted = CrawlEngine(spark, cfg, fetch_salt=8).run(max_steps=3)
-
-    def snap(st):
-        fr = sorted(
-            (r["url"], r["domain"], r["count"], r["status"], r["seq"])
-            for r in st.frontier.collect()
-        )
-        log = sorted((r["wave"], r["url"]) for r in st.crawl_log.collect())
-        pages = sorted(r["url"] for r in st.pages.collect())
-        return fr, log, pages
-
-    assert snap(plain) == snap(salted)
-
-
 def test_salted_fetch_spreads_hot_domain(spark):
     """A hot domain's wave allocation must span >1 partition under the
     salted key — the north-rule skew defeat, asserted at the plan
@@ -207,7 +167,7 @@ def test_salted_fetch_spreads_hot_domain(spark):
         )
 
     # explicit partition count: AQE coalesces by byte size, which
-    # would re-fuse tiny-but-expensive fetch batches (see crawl.py)
+    # would re-fuse tiny-but-expensive fetch batches
     plain = spread(df.repartition(32, F.col("domain")))
     salted = spread(
         df.repartition(

@@ -80,7 +80,7 @@ def test_engine_robots_integration(spark):
     cfg = _tp(wave_size=8, per_host_budget=4)
     always_slow = lambda d: (["/topic"], 1000)  # disallow /topic*, 4/wave/host
     st = CrawlEngine(
-        spark, cfg, use_robots=True, wave_budget_ms=4000, robots_fn=always_slow
+        spark, cfg, use_robots=True, robots_fn=always_slow
     ).run(max_steps=3)
     # every domain ever scheduled has exactly one robots row
     sched = {r["domain"] for r in st.crawl_log.collect()}

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gocrawler_spark.operators import cuckoo as CK
-from gocrawler_spark.plans.crawl import CrawlEngine
+from gocrawler_spark.plans.crawl import CUCKOO_SHARDS, CrawlEngine
 from tests.test_crawl_e2e import _tp
 
 
@@ -17,7 +17,7 @@ def _probe_map(spark, eng, urls):
     return {
         r["url"]: r["maybe_seen"]
         for r in CK.probe(
-            eng.state.cuckoo, df, n_shards=eng.cuckoo_shards
+            eng.state.cuckoo, df, n_shards=CUCKOO_SHARDS
         ).collect()
     }
 

@@ -130,24 +130,51 @@ def test_resume_without_checkpoint_starts_fresh(spark, tmp_path):
 
 
 def test_checkpointed_optional_tables_roundtrip(spark, tmp_path):
-    """bloom/robots/images state survives the checkpoint cycle."""
+    """robots/images state survives the checkpoint cycle."""
     cfg = _tp(wave_size=4, per_host_budget=2)
     ckpt = str(tmp_path / "ckpt4")
     eng = CrawlEngine(
-        spark, cfg, checkpoint_dir=ckpt,
-        use_bloom=True, bloom_shards=8, use_robots=True, with_images=True,
+        spark, cfg, checkpoint_dir=ckpt, use_robots=True, with_images=True
     )
     eng.run(max_steps=2)
     n_img = eng.state.images.count()
     n_rob = eng.state.robots.count()
 
     eng_b = CrawlEngine.resume(
-        spark, cfg, ckpt,
-        use_bloom=True, bloom_shards=8, use_robots=True, with_images=True,
+        spark, cfg, ckpt, use_robots=True, with_images=True
     )
     assert eng_b.state.images.count() == n_img
     assert eng_b.state.robots.count() == n_rob
-    assert eng_b.state.bloom.count() == 8
+
+
+def test_resume_skips_legacy_bloom_table(spark, tmp_path):
+    """A manifest naming a full ``bloom`` seen-set table (written by
+    engines that kept one) still resumes to the checkpointed state,
+    and the next checkpoint no longer names the table."""
+    from gocrawler_spark.operators import bloom as BL
+
+    cfg = _tp(wave_size=4, per_host_budget=2)
+    ckpt = str(tmp_path / "ckpt_bloom")
+    eng = CrawlEngine(spark, cfg, checkpoint_dir=ckpt)
+    eng.run(max_steps=2)
+    before = _snap(eng.state)
+    bloom = BL.build(
+        eng.state.frontier.select("url"),
+        n_shards=8,
+        expected_keys_per_shard=1000,
+    )
+    store = TableStore(ckpt)
+    store.commit(2, {"frontier": eng.state.frontier, "bloom": bloom})
+    assert store.read_manifest()["tables"]["bloom"]["mode"] == "full"
+    del eng
+
+    eng_b = CrawlEngine.resume(spark, cfg, ckpt)
+    assert eng_b.state.wave == 2
+    assert _snap(eng_b.state) == before
+    eng_b.run(max_steps=1)
+    m = store.read_manifest()
+    assert m["wave"] == 3
+    assert "bloom" not in m["tables"]
 
 
 def test_checkpoint_snapshot_dirs_are_garbage_collected(spark, tmp_path):

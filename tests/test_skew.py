@@ -3,9 +3,9 @@ handled explicitly").
 
 Two complementary defenses exist in this engine for hot keys:
 
-- STATIC salting where the hot key is known by construction — the
-  fetch stage splits hot domains by a url-hash sub-key
-  (plans/crawl.py fetch_salt), and the shingle self-join caps
+- STATIC caps where the hot key is known by construction — wave
+  selection caps each host at per_host_budget URLs, so no fetch
+  group outgrows it (plans/crawl.py), and the shingle self-join caps
   document frequency (queries/dedup_q.py JACCARD_DF_CAP);
 - RUNTIME skew splitting for joins whose hot keys are data-dependent
   — Spark AQE's skew-join rewrite, which this test pins down: given a
