@@ -93,7 +93,8 @@ FRONTIER_SCHEMA = T.StructType(
 
 
 def empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+    # zero partitions: scans run no (Python-worker) tasks
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), FRONTIER_SCHEMA)
 
 
 def bootstrap_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:

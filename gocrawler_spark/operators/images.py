@@ -65,7 +65,8 @@ VALIDATION_SCHEMA = T.StructType(
 
 
 def empty_images(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], IMAGE_SCHEMA)
+    # zero partitions: scans run no (Python-worker) tasks
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), IMAGE_SCHEMA)
 
 
 def build_image_table(pages: DataFrame, seed: int = 42) -> DataFrame:

@@ -67,7 +67,8 @@ def synthetic_robots(domain: str, seed: int = 42) -> tuple[list[str], int]:
 
 
 def empty_robots(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], ROBOTS_SCHEMA)
+    # zero partitions: scans run no (Python-worker) tasks
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), ROBOTS_SCHEMA)
 
 
 def fetch_missing_robots(

@@ -196,7 +196,12 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     def _df(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        # an empty list would become a Python-side RDD: every job that
+        # scans a union view over it would start Python workers for its
+        # empty partitions. emptyRDD has no partitions, so no tasks.
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), schema
+        )
 
     # append-only families and, for the summed ones, (key, value) of
     # the additive merge their union view re-aggregates

@@ -259,3 +259,24 @@ def test_wave_oracle_w1_matches_reference_oracle():
     assert [(e.url, e.count, e.status) for e in wav.pool] == [
         (e.url, e.count, e.status) for e in ref.pool
     ]
+
+
+def test_engine_empty_state_has_no_partitions(spark):
+    """Every empty table a new engine starts from (the base piece of
+    each append-only family, the robots cache, the image table) and
+    FR.empty_frontier have no partitions: the union views scan them in
+    every wave, and a partitioned empty table would start Python
+    workers for nothing in each of those jobs."""
+    from gocrawler_spark.operators import frontier as FR
+
+    eng = CrawlEngine(spark, _tp(wave_size=1), use_robots=True, with_images=True)
+    empties = {fam: pieces[0] for fam, pieces in eng._pieces.items()}
+    empties["robots"] = eng.state.robots
+    empties["frontier"] = FR.empty_frontier(spark)
+    assert set(empties) >= {"pages", "crawl_log", "corpus_freq", "images"}
+    for name, df in empties.items():
+        assert df.rdd.getNumPartitions() == 0, name
+        assert df.count() == 0, name
+    assert empties["frontier"].schema == FR.FRONTIER_SCHEMA
+    # the bootstrap frontier itself is not empty
+    assert eng.state.frontier.count() == len(set(eng.cfg.bootstrapping_links))

@@ -66,6 +66,15 @@ def image_table(spark):
     return df
 
 
+def test_empty_images_has_schema_and_no_partitions(spark):
+    """The empty image table keeps the input_hint schema and has no
+    partitions, so a job that scans it starts no Python workers."""
+    empty = IM.empty_images(spark)
+    assert empty.schema == IM.IMAGE_SCHEMA
+    assert empty.rdd.getNumPartitions() == 0
+    assert empty.count() == 0
+
+
 def test_table_schema_matches_input_hint(image_table):
     assert [(f.name, f.dataType.simpleString()) for f in image_table.schema.fields] == [
         ("image_id", "string"), ("bytes", "binary"), ("w", "int"), ("h", "int"),

@@ -32,6 +32,15 @@ def test_fetch_missing_robots_fetch_once(spark):
     assert waves["c.example"] == 2
 
 
+def test_empty_robots_has_schema_and_no_partitions(spark):
+    """The empty robots cache keeps the exact table schema and has no
+    partitions, so a job that scans it starts no Python workers."""
+    robots = PO.empty_robots(spark)
+    assert robots.schema == PO.ROBOTS_SCHEMA
+    assert robots.rdd.getNumPartitions() == 0
+    assert robots.count() == 0
+
+
 def test_robots_gate(spark):
     robots = spark.createDataFrame(
         [("x.example", ["/junk", "/private"], 500, 1), ("y.example", [], 0, 1)],
