@@ -7,9 +7,22 @@ crawler.go:547-581, splitParagraphs crawler.go:539-545, paragraph
 scrubs crawler.go:1144-1189, signature build crawler.go:1241-1246.
 
 Everything is built-in `pyspark.sql.functions` — Java regex + higher
-order array functions — so the whole document pipeline stays inside
-whole-stage codegen. Java regex matches Go RE2 on the constructs used
-(ASCII \\W, Unicode \\p{L}/\\p{N}, (?i), non-overlapping scans).
+order array functions — so no row leaves the JVM. Java regex matches Go
+RE2 on the constructs used (ASCII \\W, Unicode \\p{L}/\\p{N}, (?i),
+non-overlapping scans).
+
+Higher-order functions (`transform`, `filter`, `aggregate`,
+`array_sort` with a comparator) are NOT whole-stage codegen: Spark
+evaluates their lambda once per element, interpreted. Two rules keep
+that cost linear in the token count:
+
+- a lambda reads only its own element, never another column. The
+  optimizer inlines a projected column into the lambda bodies that
+  read it (CollapseProject counts one reference) and then re-evaluates
+  it on every lambda call;
+- a per-row sort or other costly array expression sits in its own
+  projected column that the consumer reads more than once outside any
+  lambda, so it is computed once per row (see `term_counts`).
 """
 
 from __future__ import annotations
@@ -45,7 +58,7 @@ def analyzed_tokens(text: Column, cfg: CrawlConfig) -> Column:
     alternation costs O(alternatives) backtracking per token).
 
     ASCII fragmentation (crawler.go:651): stopwordFilter's separator
-    doubling uses RE2's `\W`, which is ASCII-only — a non-ASCII rune
+    doubling uses RE2's `\\W`, which is ASCII-only — a non-ASCII rune
     INSIDE a token is a separator THERE even though the outer
     tokenizer is Unicode (crawler.go:528). So 'café' fragments to
     'caf' (the 1-char tail dies in the length gate) before the stop
@@ -124,12 +137,50 @@ def signature_expr(token_counts: Column, k: int = 7) -> Column:
     """Doc/sentence signature (crawler.go:1241-1246): Go `%v` rendering
     of the top-k tokens by (count desc, token desc).
 
-    `token_counts` is an array<struct<count:int,token:string>>; sorting
-    the struct array descending gives (count desc, token desc) — the
-    exact rSortFreq total order (crawler.go:705-718).
+    `token_counts` is an array<struct<count,token:string>> with distinct
+    tokens; sorting the struct array descending gives (count desc, token
+    desc) — the exact rSortFreq total order (crawler.go:705-718).
+    `sort_array` compares natively; `array_sort` would call an
+    interpreted comparator lambda per comparison.
     """
-    ordered = F.reverse(F.array_sort(token_counts))
+    ordered = F.sort_array(token_counts, asc=False)
     topk = F.slice(ordered, 1, k)
     return F.concat(
         F.lit("["), F.array_join(F.transform(topk, lambda s: s["token"]), " "), F.lit("]")
     )
+
+
+def term_counts(sorted_toks: Column) -> Column:
+    """Per-row term frequency of a SORTED token array, in linear time:
+    array<struct<count:int,token:string>>, one entry per distinct token,
+    token-ascending.
+
+    Equal tokens are adjacent after the sort, so each run start is a
+    position whose token differs from its predecessor's; a token's
+    count is the distance to the next run start. A sentinel entry at
+    position n+1 (token null) closes the last run. Every lambda reads
+    only its own element (module docstring), so the cost is a few
+    interpreted calls per token instead of one scan of the whole array
+    per distinct token.
+
+    `sorted_toks` must be a projected column holding `sort_array(...)`
+    (e.g. `withColumn("_toks", F.sort_array(toks))`): it is read three
+    times here, which keeps the optimizer from inlining the sort."""
+    n = F.size(sorted_toks)
+    starts = F.filter(
+        F.arrays_zip(
+            sorted_toks.alias("token"),
+            F.concat(F.array(F.lit(None).cast("string")), sorted_toks).alias("prev"),
+            F.sequence(F.lit(1), n + 1).alias("pos"),
+        ),
+        lambda e: ~e["token"].eqNullSafe(e["prev"]),
+    )
+    runs = F.transform(
+        F.arrays_zip(starts.alias("run"), F.slice(starts, 2, n + 1).alias("next")),
+        lambda e: F.struct(
+            (e["next"]["pos"] - e["run"]["pos"]).alias("count"),
+            e["run"]["token"].alias("token"),
+        ),
+    )
+    # the sentinel's own entry has no next run: drop it
+    return F.filter(runs, lambda e: e["token"].isNotNull())

@@ -5,12 +5,16 @@ stopword-ratio floor (P2), curated-paragraph gate (P3), doc-length band
 best paragraph (T12/W5), burstiness (P7).
 
 One declarative column chain per wave: paragraphs are exploded once,
-every predicate is a JVM regex/array expression (whole-stage codegen),
-and the only shuffles are the per-doc re-aggregation (groupBy url) and
-the cross-doc signature window. Language detection is pluggable: the
-default is the deterministic synthetic-web marker; real deployments
-swap in a pandas-UDF detector (whatlanggo has no bit-exact Python twin
-— SURVEY.md §7.3).
+every predicate is a JVM regex/array expression, and the only shuffles
+are the per-doc re-aggregation (groupBy url) and the cross-doc
+signature window. Language detection is pluggable: the default is the
+deterministic synthetic-web marker; real deployments swap in a
+pandas-UDF detector (whatlanggo has no bit-exact Python twin —
+SURVEY.md §7.3).
+
+The array steps (`transform`, `filter`, ...) are higher-order functions,
+which Spark evaluates per element outside whole-stage codegen; their
+lambdas read only their own element (functions/text.py docstring).
 """
 
 from __future__ import annotations
@@ -147,40 +151,29 @@ def doc_gates(
     'the' zeroed), signature, score, max_ratio, burst_ok.
     """
     toks = TX.analyzed_tokens(F.col("curated"), cfg)
+    # "the" is zeroed before the signature (crawler.go:1231), and Go's
+    # `fDoc["the"] = 0` INSERTS the key when absent (map assignment), so
+    # every doc's frequency table carries exactly one ("the", 0) entry
+    # even if the token never occurs — and with < 7 distinct tokens
+    # that entry reaches the signature (pyoracle.py:222 does the same).
+    # So count the other tokens and append ("the", 0). The sort sits in
+    # the `_toks` projection: TX.term_counts needs sorted input and
+    # must not re-sort per lambda call.
     df = curated.withColumn(
         "len_ok",
         (F.col("doc_len") >= cfg.min_doc_len) & (F.col("doc_len") <= cfg.max_doc_len),
-    ).withColumn("_toks", toks)
+    ).withColumn("_toks", F.sort_array(F.array_remove(toks, "the")))
 
     # Per-doc term frequency WITHOUT a shuffle (A1 is per-doc state):
-    # for each distinct token count its occurrences in the row-local
-    # array. "the" is zeroed before the signature (crawler.go:1231).
-    tc = F.transform(
-        F.array_distinct(F.col("_toks")),
-        lambda t: F.struct(
-            F.when(t == "the", F.lit(0))
-            .otherwise(F.size(F.filter(F.col("_toks"), lambda x: x == t)))
-            .alias("count"),
-            t.alias("token"),
+    # run lengths of the row-local sorted token array.
+    tc = F.concat(
+        TX.term_counts(F.col("_toks")),
+        F.array(
+            F.struct(
+                F.lit(0).cast("int").alias("count"),
+                F.lit("the").alias("token"),
+            )
         ),
-    )
-    # Go's `fDoc["the"] = 0` INSERTS the key when absent (map
-    # assignment), so every doc's frequency table carries a ("the", 0)
-    # entry even if the token never occurs — and with < 7 distinct
-    # tokens that entry reaches the signature. Mirror the insertion
-    # (pyoracle.py:222 does the same).
-    tc = F.when(
-        F.array_contains(F.col("_toks"), F.lit("the")), tc
-    ).otherwise(
-        F.concat(
-            tc,
-            F.array(
-                F.struct(
-                    F.lit(0).cast("int").alias("count"),
-                    F.lit("the").alias("token"),
-                )
-            ),
-        )
     )
     df = df.withColumn("_tc", tc)
     df = df.withColumn("signature", TX.signature_expr(F.col("_tc"), k=7))

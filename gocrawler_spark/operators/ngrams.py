@@ -68,25 +68,15 @@ def sentences_of(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 def dedup_sentences(sents: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """First sentence per top-7-token signature wins (W3 dedup).
 
-    Per-sentence token counts are computed LOCALLY with higher-order
-    array functions (O(distinct·len) per short sentence) instead of an
-    explode + double groupBy — the old plan shuffled every (sentence
-    string, token) pair twice just to count within one row. The only
-    remaining shuffle is the signature dedup window itself."""
+    Per-sentence token counts are computed LOCALLY as run lengths of
+    the sorted token array (TX.term_counts, linear in the sentence
+    length) instead of an explode + double groupBy — the old plan
+    shuffled every (sentence string, token) pair twice just to count
+    within one row. The only remaining shuffle is the signature dedup
+    window itself."""
     counted = sents.withColumn(
-        "atoks", TX.analyzed_tokens(F.col("sentence"), cfg)
-    ).withColumn(
-        "token_counts",
-        F.transform(
-            F.array_distinct(F.col("atoks")),
-            lambda x: F.struct(
-                F.size(
-                    F.filter(F.col("atoks"), lambda t: t == x)
-                ).cast("int").alias("count"),
-                x.alias("token"),
-            ),
-        ),
-    )
+        "atoks", F.sort_array(TX.analyzed_tokens(F.col("sentence"), cfg))
+    ).withColumn("token_counts", TX.term_counts(F.col("atoks")))
     sig = TX.signature_expr(F.col("token_counts"), 7)
     w = Window.partitionBy("signature").orderBy("doc_id", "pos")
     return (

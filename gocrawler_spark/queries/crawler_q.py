@@ -140,15 +140,19 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 doc signatures (doc_id, signature) — one row per en doc;
     shared by doc_signature, signature_dedup, and the cluster star
     edges; materialized once per session (memo_result)."""
-    docs = _an_toks(_docs(spark, sf_dir)).filter(F.size("_toks") > 0)
+    docs = (
+        _an_toks(_docs(spark, sf_dir))
+        .filter(F.size("_toks") > 0)
+        .withColumn("_toks", F.sort_array("_toks"))
+    )
     tc = F.transform(
-        F.array_distinct(F.col("_toks")),
-        lambda t: F.struct(
-            F.when(t == "the", F.lit(0))
-            .otherwise(F.size(F.filter(F.col("_toks"), lambda x: x == t)))
+        TX.term_counts(F.col("_toks")),
+        lambda e: F.struct(
+            F.when(e["token"] == "the", F.lit(0))
+            .otherwise(e["count"])
             .cast("long")
             .alias("count"),
-            t.alias("token"),
+            e["token"].alias("token"),
         ),
     )
     return docs.select("doc_id", TX.signature_expr(tc, k=7).alias("signature"))

@@ -151,33 +151,6 @@ def test_crawl_wave_images_invariant(spark):
     assert st.images.select("image_id").distinct().count() == n
 
 
-def test_salted_fetch_spreads_hot_domain(spark):
-    """A hot domain's wave allocation must span >1 partition under the
-    salted key — the north-rule skew defeat, asserted at the plan
-    level rather than by wall clock."""
-    from pyspark.sql import functions as F
-
-    rows = [(f"https://hot.example/p{i}", "hot.example") for i in range(64)]
-    df = spark.createDataFrame(rows, "url string, domain string")
-
-    def spread(df2):
-        return (
-            df2.withColumn("pid", F.spark_partition_id())
-            .select("pid").distinct().count()
-        )
-
-    # explicit partition count: AQE coalesces by byte size, which
-    # would re-fuse tiny-but-expensive fetch batches
-    plain = spread(df.repartition(32, F.col("domain")))
-    salted = spread(
-        df.repartition(
-            32, F.col("domain"), F.pmod(F.xxhash64("url"), F.lit(8))
-        )
-    )
-    assert plain == 1, "unsalted: one partition per domain"
-    assert salted > 1, "salted: hot domain split across partitions"
-
-
 def test_scale_fixtures_fresh():
     """The committed crawl_scale_* fixtures equal a fresh WaveOracle
     run — guards the driver-gate CSVs against drifting from

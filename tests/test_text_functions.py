@@ -3,8 +3,12 @@ on adversarial fixtures (unicode tokens, adjacent stopwords, 1-2 char
 tokens, numbers, keyword shadowing)."""
 
 import math
+import re
+from collections import Counter
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -117,6 +121,65 @@ def test_signature_expr_parity(spark):
     assert got == pyref.signature_of({"covid": 5, "virus": 3, "alpha": 3, "zz": 1})
 
 
+def test_signature_expr_ties_are_token_descending(spark):
+    """Equal counts rank token-descending (rSortFreq, crawler.go:705-718):
+    the descending struct sort compares the token after the count."""
+    tc = [Row(count=c, token=t) for t, c in
+          [("alpha", 2), ("zeta", 2), ("b", 1), ("mid", 2), ("zz", 1)]]
+    got = (
+        spark.createDataFrame([Row(tc=tc)])
+        .select(T.signature_expr(F.col("tc")).alias("sig"))
+        .first()["sig"]
+    )
+    assert got == "[zeta mid alpha zz b]"
+    assert got == pyref.signature_of({r["token"]: r["count"] for r in tc})
+
+
+def _term_counts(spark, docs):
+    """TX.term_counts over each token list, as (token, count) pairs."""
+    df = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(docs)], "i int, toks array<string>"
+    ).withColumn("toks", F.sort_array("toks"))
+    rows = df.select("i", T.term_counts(F.col("toks")).alias("tc")).collect()
+    return [
+        [(e["token"], e["count"]) for e in r["tc"]]
+        for r in sorted(rows, key=lambda r: r["i"])
+    ]
+
+
+def test_term_counts_edge_cases(spark):
+    docs = [
+        [],
+        ["covid"],
+        ["the"],
+        ["the"] * 5,
+        ["b", "the", "a", "b", "the", "a", "b"],
+        ["virus", "alpha", "virus", "zeta", "alpha", "virus"],
+    ]
+    assert _term_counts(spark, docs) == [
+        sorted(Counter(d).items()) for d in docs
+    ]
+
+
+_TOKEN = st.one_of(
+    st.sampled_from(["the", "covid", "virus", "a", "aa", "zeta"]),
+    st.text("abcéz北", min_size=1, max_size=3),
+)
+
+
+@given(docs=st.lists(st.lists(_TOKEN, max_size=40), min_size=1, max_size=30))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+def test_term_counts_equals_counter(spark, docs):
+    """Run lengths of the sorted array == collections.Counter, one entry
+    per distinct token, token-ascending (UTF-8 byte order == code point
+    order)."""
+    assert _term_counts(spark, docs) == [
+        sorted(Counter(d).items()) for d in docs
+    ]
+
+
 def test_paragraph_split_parity(spark):
     t = "one\n\ntwo\r\nthree\rfour"
     df = spark.createDataFrame([Row(t=t)])
@@ -192,6 +255,27 @@ def test_doc_gates_forces_the_entry_when_absent(spark):
     assert out["u1"].endswith(" the]")
     # literal 'the' present: zeroed in place, no duplicate entry
     assert out["u2"] == pyref.signature_of({"alpha": 1, "the": 0})
+
+
+def test_doc_gates_sorts_tokens_once(spark):
+    """The optimizer inlines a projected column into every lambda body
+    that reads it and re-evaluates it per lambda call; a token sort
+    inlined that way made doc_gates slower than the quadratic count it
+    replaced. The optimized plan must hold the token sort once (the
+    `_toks` projection) plus the signature's descending sort of the
+    `_tc` column."""
+    from gocrawler_spark.config import test_profile
+    from gocrawler_spark.operators.curation import doc_gates
+
+    curated = spark.createDataFrame(
+        [Row(url="u1", curated="alpha beta beta the", doc_len=4)]
+    )
+    plan = (
+        doc_gates(curated, test_profile())
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("sort_array(") == 2
+    assert len(re.findall(r"sort_array\(_tc#\d+, false\)", plan)) == 1
 
 
 def test_paragraph_200_gate_counts_bytes_not_chars(spark):
