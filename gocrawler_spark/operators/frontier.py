@@ -23,6 +23,7 @@ Status codes follow the reference (crawler.go:88): 0 pending,
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,12 +105,24 @@ def bootstrap_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
     Duplicate seeds merge through addLink's count++ on re-sight
     (crawler.go:455-459): one pool entry per distinct URL, count =
     occurrences, seq = first-sight order — NOT one row per list entry
-    (duplicate url keys would corrupt every later url-keyed merge)."""
+    (duplicate url keys would corrupt every later url-keyed merge).
+
+    The seeds go to the JVM as one Arrow table, whatever the session's
+    Arrow conf: a list of tuples would become a Python RDD, whose scan
+    starts Python workers in every set-up and resume, while the Arrow
+    table becomes a local relation that the optimizer folds, filter
+    and projection included, into one ``LocalTableScan``."""
     merged: dict[str, int] = {}
     for u in cfg.bootstrapping_links:
         merged[u] = merged.get(u, 0) + 1
-    rows = [(u, c, i) for i, (u, c) in enumerate(merged.items())]
-    df = spark.createDataFrame(rows, "url string, count long, seq long")
+    seeds = pa.table(
+        {
+            "url": pa.array(list(merged), pa.string()),
+            "count": pa.array(list(merged.values()), pa.int64()),
+            "seq": pa.array(range(len(merged)), pa.int64()),
+        }
+    )
+    df = spark.createDataFrame(seeds)
     df = df.filter(U.link_seems_ok(F.col("url"), cfg, avoid_custom_check=True))
     return df.select(
         "url",

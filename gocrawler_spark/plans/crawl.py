@@ -46,6 +46,7 @@ crawler.go:1082-1406,1477-1543.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 from typing import Callable, Iterator
 
@@ -289,20 +290,26 @@ class CrawlEngine:
             df = deltas[0]
             for d in deltas[1:]:
                 df = df.unionByName(d)
-            k = self._seg_counter.get(fam, 0)
-            seg = self.store.write_segment(
-                fam, f"seg{k:06d}", df, self.state.wave
-            )
-            if seg["row_count"] > 0:
-                self._seg_counter[fam] = k + 1
-                self._flushed_segs.setdefault(fam, []).append(seg)
-            else:
-                # nothing appended this cycle: drop the empty segment
-                # (the index is reused and overwritten next flush)
-                import shutil
-
-                shutil.rmtree(seg["path"], ignore_errors=True)
+            self._write_segment(fam, df)
             self._pending[fam] = []
+
+    def _write_segment(
+        self, fam: str, df: DataFrame, tombstone_key: str | None = None
+    ) -> None:
+        """Write ``df`` as the family's next segment and queue it for
+        the next commit; with ``tombstone_key`` the rows are keys to
+        delete. An empty segment is dropped (the index is reused and
+        overwritten by the next write)."""
+        k = self._seg_counter.get(fam, 0)
+        seg = self.store.write_segment(fam, f"seg{k:06d}", df, self.state.wave)
+        if seg["row_count"] == 0:
+            shutil.rmtree(seg["path"], ignore_errors=True)
+            return
+        if tombstone_key is not None:
+            seg["kind"] = "tombstone"
+            seg["key"] = tombstone_key
+        self._seg_counter[fam] = k + 1
+        self._flushed_segs.setdefault(fam, []).append(seg)
 
     def _compact(self) -> None:
         """Collapse every piece list into one pinned table and reset
@@ -683,19 +690,7 @@ class CrawlEngine:
             # re-fetch appends after the tombstone and survives.
             self._flush_pending()
             for fam in ("pages", "signatures"):
-                k = self._seg_counter.get(fam, 0)
-                seg = self.store.write_segment(
-                    fam, f"seg{k:06d}", retired, st.wave
-                )
-                if seg["row_count"] > 0:
-                    seg["kind"] = "tombstone"
-                    seg["key"] = "url"
-                    self._seg_counter[fam] = k + 1
-                    self._flushed_segs.setdefault(fam, []).append(seg)
-                else:
-                    import shutil
-
-                    shutil.rmtree(seg["path"], ignore_errors=True)
+                self._write_segment(fam, retired, tombstone_key="url")
         st.cuckoo = self._pin(
             CK.delete(st.cuckoo, retired, n_shards=CUCKOO_SHARDS)
         )

@@ -24,8 +24,14 @@ the same contract on plain parquet (SURVEY.md §4: the shim):
   engine flushes at compaction time to release memory pins); they
   stay invisible until committed.
 - per-partition lineage: every segment records its wave of origin,
-  row count, and parquet part-files with sizes, plus free-form engine
-  metrics on the manifest.
+  row count, schema (``StructType`` JSON) and parquet part-files with
+  sizes; the manifest adds engine metrics plus what the commit wrote
+  (segments, rows, bytes per table and in total).
+- bookkeeping runs no Spark job: a segment's row count is summed from
+  its part files' parquet footers on the driver, and the reader hands
+  each segment's recorded schema to the parquet source instead of
+  inferring it from the footers (an inference job per read). Segments
+  of manifests that predate the ``schema`` key are read by inference.
 
 Resume = read manifest → union each table's named segments → hand the
 DataFrames back to a fresh CrawlEngine. Kill-and-resume equivalence
@@ -41,9 +47,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "manifest.json"
 
@@ -64,13 +73,14 @@ class TableStore:
         path = os.path.join(self.root, name, label)
         df.write.mode("overwrite").parquet(path)
         files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        # count from the written files' parquet footers (metadata-only
-        # scan), never by re-executing the delta plan
-        n = df.sparkSession.read.parquet(path).count()
+        # rows summed from the written part files' footers, read on the
+        # driver: no Spark job, and the delta plan is never re-executed
+        n = sum(pq.read_metadata(os.path.join(path, f)).num_rows for f in files)
         return {
             "path": path,
             "wave": wave,
             "row_count": n,
+            "schema": df.schema.json(),
             "partitions": [
                 {"file": f, "bytes": os.path.getsize(os.path.join(path, f))}
                 for f in files
@@ -90,14 +100,19 @@ class TableStore:
         append the new delta segments to each delta table's committed
         list (carried forward from the current manifest), then swap
         the manifest in. Idempotent per wave: re-running a wave
-        overwrites its full dirs and re-commits the same lists."""
+        overwrites its full dirs and re-commits the same lists. The
+        manifest's ``metrics`` gain ``written``: what this commit added
+        (its full-table segments and the new delta segments, tombstones
+        included), summed from the segment entries."""
         prev = self.read_manifest() or {"tables": {}}
         entries: dict[str, dict] = {}
+        new: dict[str, list[dict]] = {}  # segments this commit adds
         for name, df in full_tables.items():
             if df is None:
                 continue
             seg = self.write_segment(name, f"wave={wave:06d}", df, wave)
             entries[name] = {"mode": "full", "segments": [seg]}
+            new[name] = [seg]
         # delta tables with nothing new this commit keep their
         # committed segment lists — a quiet table must not vanish
         for name, old in prev["tables"].items():
@@ -135,11 +150,12 @@ class TableStore:
                 "mode": "delta",
                 "segments": committed + list(new_segs),
             }
+            new[name] = list(new_segs)
         manifest = {
             "format_version": 2,
             "wave": wave,
             "tables": entries,
-            "metrics": metrics or {},
+            "metrics": {**(metrics or {}), "written": _written(new)},
         }
         tmp = os.path.join(self.root, f".{MANIFEST}.tmp")
         with open(tmp, "w") as f:
@@ -153,8 +169,6 @@ class TableStore:
         # plan created from the previous snapshot may not have
         # materialized yet); everything older is unreachable by any
         # reader and removed.
-        import shutil
-
         keep = set()
         for src in (manifest, prev):
             for entry in src.get("tables", {}).values():
@@ -186,7 +200,11 @@ class TableStore:
 
     def load_snapshot(self, spark: SparkSession) -> Optional[tuple[int, dict]]:
         """(wave, {table: DataFrame}) for the last committed snapshot,
-        or None if no manifest exists. Delta tables come back as the
+        or None if no manifest exists. Runs no Spark job: each segment
+        entry carries the schema it was written with, and the parquet
+        reader takes it instead of inferring one from the footers
+        (segments written before entries carried a schema are still
+        read by inference). Delta tables come back as the
         SEQUENTIAL fold of their segments: data segments union in
         commit order, and a tombstone segment (``kind: tombstone``,
         written by CrawlEngine.retire) anti-joins its keys against
@@ -207,10 +225,10 @@ class TableStore:
             plain = [s for s in segs if s.get("kind") != "tombstone"]
             if not any(s.get("kind") == "tombstone" for s in segs):
                 # fast path: one multi-path reader, no fold
-                df = spark.read.parquet(*[s["path"] for s in plain])
+                df = _read(spark, plain)
             else:
                 for s in segs:
-                    sdf = spark.read.parquet(s["path"])
+                    sdf = _read(spark, [s])
                     if s.get("kind") == "tombstone":
                         if df is not None:
                             key = s.get("key", "url")
@@ -222,3 +240,31 @@ class TableStore:
             if df is not None:
                 tables[name] = df
         return m["wave"], tables
+
+
+def _read(spark: SparkSession, segs: list[dict]) -> DataFrame:
+    """One parquet reader over ``segs``: given their recorded schema
+    when they all carry the same one, else inferring it (a job)."""
+    schemas = {s.get("schema") for s in segs}
+    reader = spark.read
+    if len(schemas) == 1 and None not in schemas:
+        reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+    return reader.parquet(*[s["path"] for s in segs])
+
+
+def _written(new: dict[str, list[dict]]) -> dict:
+    """Segments, rows and parquet bytes per table and in total, summed
+    from segment manifest entries (no Spark job)."""
+    tables = {
+        name: {
+            "segments": len(segs),
+            "rows": sum(s["row_count"] for s in segs),
+            "bytes": sum(p["bytes"] for s in segs for p in s["partitions"]),
+        }
+        for name, segs in new.items()
+    }
+    totals = {
+        k: sum(t[k] for t in tables.values())
+        for k in ("segments", "rows", "bytes")
+    }
+    return {"tables": tables, **totals}
